@@ -12,6 +12,7 @@ Layout under an index root:
     docstats/              (doc_id, url, doc_len) + corpus scalars in stats/
     stats/                 single-row (n_docs, avgdl)
     postings/bucket=<b>/   compressed posting segments (resume unit: bucket)
+    dictionary/group=<g>/  per-term df + salt plan of the group's buckets
     title_index/           (term, doc_id) pairs from the title pipeline
     pageranks/             (doc_id, rank)
     _lineage/              per-partition completion records (checkpoint.py)
@@ -49,6 +50,23 @@ META = "_meta.json"
 # compression); readers and cached test fixtures key off it
 INDEX_FORMAT = 4
 
+DICTIONARY = "dictionary"  # dictionary/group=<g>/: per-term df + salt plan
+
+# Read schemas of the query-path tables, pinned with INDEX_FORMAT. A
+# parquet read without a schema runs one Spark job per call to infer a
+# schema that only the code can change; serving reads every table it
+# touches through these instead. (The postings segment schema is
+# indexer.POSTINGS_SCHEMA.)
+SCHEMAS = {
+    STATS: "n_docs long, avgdl double",
+    DICTIONARY: "bucket int, term string, df long, cf long, n_salts int",
+    TITLE_INDEX: "term string, doc_id long",
+    ANCHOR_INDEX: "doc_id long, term string, n_anchors long",
+    PAGERANKS: "doc_id long, rank double",
+    DOCSTATS: "doc_id long, url string, doc_len int",
+    DOCSTORE: "doc_id long, url string, title string, snippet string",
+}
+
 
 def path(root: str, table: str) -> str:
     return os.path.join(root, table)
@@ -56,6 +74,12 @@ def path(root: str, table: str) -> str:
 
 def exists(root: str, table: str) -> bool:
     return os.path.exists(path(root, table))
+
+
+def read_table(spark, root: str, table: str):
+    """DataFrame over ``table`` read with its pinned schema (no
+    schema-inference job)."""
+    return spark.read.schema(SCHEMAS[table]).parquet(path(root, table))
 
 
 # ---------------------------------------------------------------------------

@@ -7,7 +7,12 @@ Two physical strategies, one semantics:
   query-term table -> deterministic fold-sum per (query, doc) ->
   window top-k. This is the scale path: no per-group memory beyond one
   segment blob, every join against query terms is a broadcast, the scan
-  touches only the buckets holding query terms.
+  touches only the buckets holding query terms. Title and anchor hits,
+  exclusions and phrase adjacency ride the same join and aggregation
+  (the single-pass top-k aggregation of *Cache-Efficient Top-k
+  Aggregation over High Cardinality Large Datasets*, VLDB 2023), so a
+  batch of any mix of queries is one plan; query-path reads use the
+  schemas pinned in ``catalog.SCHEMAS`` (no inference jobs).
 * ``wand.py`` — per-query block-max WAND over the same segments for
   low-latency serving (validated equal to the exhaustive path).
 
@@ -25,6 +30,7 @@ north_rule. The blend weights 0.3 (pagerank) / 0.5 (title hit) /
 
 from __future__ import annotations
 
+import json
 import math
 import os
 from collections.abc import Iterator
@@ -38,7 +44,7 @@ from pyspark.sql import types as T
 from . import catalog
 from .bm25 import B, K1, W_PAGERANK, W_RELEVANCE, W_TITLE
 from .compress import decode_postings, to_signed, varbyte_decode
-from .indexer import term_buckets
+from .indexer import POSTINGS_SCHEMA, term_buckets
 from .porter import porter_stem
 from .textprep import java_tokens
 
@@ -74,18 +80,11 @@ def parse_exclusions(q: dict) -> list[str]:
     return parse_query(raw)
 
 
-# per-postings-root cache of the INFERRED segment schema: inference
-# re-reads parquet footers on every request (~0.1-0.7 s of the solo
-# plan phase, tools/solo_serve_profile.py) for a schema that is fixed
-# by the code version (catalog.INDEX_FORMAT) — within one process it
-# cannot change, so infer once and pass it explicitly thereafter.
-_SEGMENT_SCHEMA_CACHE: dict[str, "T.StructType"] = {}
-
-
 def load_segments(spark: SparkSession, root: str, terms: list[str]) -> DataFrame:
     """Bucket-pruned read of posting segments for the given terms.
     Layout: postings/group=<g>/bucket=<b>/ (group = build resume unit,
-    bucket = term-hash pruning unit)."""
+    bucket = term-hash pruning unit). The segment schema is pinned by
+    the code (``indexer.POSTINGS_SCHEMA``), so no inference job runs."""
     postings_root = catalog.path(root, catalog.POSTINGS)
     buckets = sorted(set(term_buckets(spark, terms, _n_buckets(root)).values()))
     paths = [
@@ -95,33 +94,31 @@ def load_segments(spark: SparkSession, root: str, terms: list[str]) -> DataFrame
             os.path.join(postings_root, "group=*", f"bucket={b}")
         )
     ]
+    reader = spark.read.schema(POSTINGS_SCHEMA)
     if not paths:
-        return spark.read.parquet(postings_root).filter(F.lit(False))
-    reader = spark.read.option("basePath", postings_root)
-    cached = _SEGMENT_SCHEMA_CACHE.get(postings_root)
-    if cached is not None:
-        df = reader.schema(cached).parquet(*paths)
-    else:
-        df = reader.parquet(*paths)
-        _SEGMENT_SCHEMA_CACHE[postings_root] = df.schema
+        return reader.parquet(postings_root).filter(F.lit(False))
+    df = reader.option("basePath", postings_root).parquet(*paths)
     return df.filter(F.col("term").isin(terms))
 
 
-def _n_buckets(root: str) -> int:
-    """Bucket count the build hashed terms with — from the persisted
-    index metadata, NOT from counting bucket directories: partitionBy
-    omits empty buckets, so a directory count can undercount and send
-    every query term to the wrong bucket."""
+def _meta_int(root: str, key: str) -> int:
+    """A build parameter from the persisted index metadata, NOT from
+    directory shape: partitionBy omits empty buckets, so a directory
+    count can undercount and send every query term to the wrong
+    bucket or group."""
     meta = catalog.read_meta(root)
-    if "n_buckets" not in meta:
-        # NO directory-count fallback: partitionBy omits empty buckets,
-        # so a count can undercount and silently send every query term
-        # to the wrong bucket (_meta.json is the source of truth)
+    if key not in meta:
+        # NO directory-count fallback (_meta.json is the source of truth)
         raise RuntimeError(
-            f"{root}/_meta.json has no n_buckets — rebuild the postings "
+            f"{root}/_meta.json has no {key} — rebuild the postings "
             "stage (build_postings_stage writes it) before querying"
         )
-    return int(meta["n_buckets"])
+    return int(meta[key])
+
+
+def _n_buckets(root: str) -> int:
+    """Bucket count the build hashed terms with."""
+    return _meta_int(root, "n_buckets")
 
 
 def decode_segments(segments: DataFrame) -> DataFrame:
@@ -242,57 +239,123 @@ def phrase_match(spark: SparkSession, root: str, phrase: list[str]) -> DataFrame
         F.count("*").alias("n_slots"),
         F.collect_list("sp").alias("sets"),
     )
-    inter = F.aggregate(
-        F.slice("sets", 2, len(stemmed)),
-        F.element_at("sets", 1),
-        lambda acc, x: F.array_intersect(acc, x),
-    )
     return (
         per_doc.filter(F.col("n_slots") == len(stemmed))
-        .select("doc_id", F.size(inter).alias("n_hits"))
+        .select("doc_id", _phrase_hits("sets", len(stemmed)).alias("n_hits"))
         .filter(F.col("n_hits") > 0)
         .orderBy("doc_id")
     )
 
 
+def _phrase_hits(sets, n_slots):
+    """Phrase occurrences in one doc, from its per-slot shifted position
+    arrays: the positions present in EVERY slot's set — an
+    order-insensitive array-intersection fold, so the collect_list
+    ordering cannot change the count. ``sets`` must hold ``n_slots``
+    arrays."""
+    return F.size(
+        F.aggregate(
+            F.slice(sets, 2, n_slots),
+            F.element_at(sets, 1),
+            lambda acc, x: F.array_intersect(acc, x),
+        )
+    )
+
+
 def term_idfs(spark: SparkSession, root: str, terms: list[str], n_docs: int) -> dict[str, float]:
     """Per-term idf from the dictionary, computed driver-side in Python
-    float64 (one ln definition for engine + oracle)."""
-    dict_root = catalog.path(root, "dictionary")
-    df = spark.read.option("basePath", dict_root).parquet(dict_root)
-    rows = df.filter(F.col("term").isin(terms)).select("term", "df").collect()
+    float64 (one ln definition for engine + oracle). Reads only the
+    ``dictionary/group=<g>`` directories holding the terms' buckets
+    (``g = bucket // group_size``), as ``load_segments`` prunes
+    postings."""
+    if not terms:
+        return {}
+    group_size = _meta_int(root, "group_size")
+    groups = sorted(
+        {b // group_size
+         for b in term_buckets(spark, terms, _n_buckets(root)).values()}
+    )
+    dict_root = catalog.path(root, catalog.DICTIONARY)
+    paths = [
+        p for g in groups
+        for p in catalog.glob_dirs(os.path.join(dict_root, f"group={g}"))
+    ]
+    if not paths:
+        return {}
+    rows = (
+        spark.read.schema(catalog.SCHEMAS[catalog.DICTIONARY])
+        .parquet(*paths)
+        .filter(F.col("term").isin(terms))
+        .select("term", "df")
+        .collect()
+    )
     return {
         r["term"]: math.log(1.0 + (n_docs - r["df"] + 0.5) / (r["df"] + 0.5))
         for r in rows
     }
 
 
-def _query_terms_df(
-    spark: SparkSession, queries: list[dict], idfs: dict[str, float]
-) -> DataFrame:
-    """(query_id, term, idf, n_terms, mode, k); absent terms are kept for
-    the AND n_terms count but carry no postings."""
+# roles of the query-term table's rows and kinds of the index hits
+# joined against it; only the (kind, role) pairs in _score_rows meet
+ROLE_TERM, ROLE_EXCL, ROLE_SLOT = "term", "excl", "slot"
+KIND_POSTING, KIND_POSITIONS, KIND_TITLE, KIND_ANCHOR = (
+    "posting", "positions", "title", "anchor"
+)
+QUERY_MODES = ("OR", "AND", "PHRASE")
+_QT_COLUMNS = (
+    ("query_id", "int"), ("term", "string"), ("role", "string"),
+    ("idf", "double"), ("slot", "int"), ("n_terms", "int"),
+    ("mode", "string"), ("k", "int"), ("off", "int"), ("n_slots", "int"),
+)
+
+
+def _query_term_rows(
+    queries: list[dict], idfs: dict[str, float]
+) -> list[tuple]:
+    """The batch's query-term table, as ``_QT_COLUMNS`` tuples: one row
+    per (query_id, term, role) — a scoring term (with its idf), an
+    exclusion term, or a phrase slot (a repeated phrase term gets one
+    row per slot). Every row carries its query's n_terms, mode, k,
+    offset and phrase length, so they ride the (query_id, doc_id)
+    aggregation. Absent terms are kept for the AND n_terms count but
+    carry no postings."""
     rows = []
     for q in queries:
+        qid = int(q["query_id"])
         mode = str(q.get("mode", "OR")).upper()
-        if mode not in ("OR", "AND"):
-            # the two physical strategies default opposite ways on junk
-            # values (exhaustive -> AND, WAND -> OR); fail loudly instead
-            raise ValueError(f"query mode must be OR or AND, got {q.get('mode')!r}")
         terms = parse_query(q["query"])
-        for t in terms:
-            rows.append(
-                (
-                    int(q["query_id"]),
-                    t,
-                    float(idfs.get(t, 0.0)),
-                    len(terms),
-                    mode,
-                    int(q.get("k", 15)),
-                )
-            )
-    schema = "query_id int, term string, idf double, n_terms int, mode string, k int"
-    return spark.createDataFrame(rows, schema)
+        slots = (
+            [porter_stem(t) for t in java_tokens(q["query"].lower())]
+            if mode == "PHRASE" else []
+        )
+        # a phrase match contains every term, so a PHRASE query is an
+        # AND query over the docs its slots line up in
+        const = (
+            len(terms), "OR" if mode == "OR" else "AND",
+            int(q.get("k", 15)), int(q.get("offset", 0) or 0),
+            len(slots) or None,
+        )
+        rows += [(qid, t, ROLE_TERM, float(idfs.get(t, 0.0)), None, *const)
+                 for t in terms]
+        rows += [(qid, t, ROLE_EXCL, None, None, *const)
+                 for t in parse_exclusions(q)]
+        rows += [(qid, t, ROLE_SLOT, None, i, *const)
+                 for i, t in enumerate(slots)]
+    return rows
+
+
+def _query_terms_df(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """The query-term table as a DataFrame. A literal table: the rows
+    travel as ONE JSON constant inlined over a one-row relation, so
+    its broadcast is a single one-task job, not a pickled RDD of one
+    slice per core. Python's float repr and the JVM's double parsing
+    round-trip every idf exactly."""
+    names = [n for n, _ in _QT_COLUMNS]
+    rows_json = json.dumps([dict(zip(names, r)) for r in rows])
+    schema = ", ".join(f"{n}: {t}" for n, t in _QT_COLUMNS)
+    return spark.sql("SELECT 1").select(
+        F.inline(F.from_json(F.lit(rows_json), f"array<struct<{schema}>>"))
+    )
 
 
 def all_query_terms(queries: list[dict]) -> list[str]:
@@ -303,14 +366,129 @@ def all_query_terms(queries: list[dict]) -> list[str]:
     return list(out)
 
 
+def _check_queries(queries: list[dict]) -> None:
+    for q in queries:
+        if str(q.get("mode", "OR")).upper() not in QUERY_MODES:
+            # the two physical strategies default opposite ways on junk
+            # values (exhaustive -> AND, WAND -> OR); fail loudly instead
+            raise ValueError(
+                f"query mode must be one of {QUERY_MODES}, got {q.get('mode')!r}"
+            )
+        if int(q.get("offset", 0) or 0) < 0:
+            raise ValueError(f"query offset must be >= 0, got {q['offset']!r}")
+
+
+def _index_hits(
+    spark: SparkSession, root: str, rows: list[tuple], use_anchor: bool
+) -> DataFrame:
+    """(term, doc_id, tf, doc_len, positions, kind) rows of every index
+    structure the query-term ``rows`` need, unioned so ONE broadcast
+    join routes them to their queries: decoded postings of the scoring
+    and exclusion terms, decoded position lists of the phrase terms,
+    and title (and anchor) hits of the scoring terms."""
+
+    def terms(*roles: str) -> list[str]:
+        return sorted({term for _, term, role, *_ in rows if role in roles})
+
+    phrase = terms(ROLE_SLOT)
+    no_pos = F.lit(None).cast("array<int>")
+    no_int = F.lit(None).cast("int")
+    parts = [
+        decode_segments(
+            load_segments(spark, root, terms(ROLE_TERM, ROLE_EXCL))
+        ).select(
+            "term", "doc_id", "tf", "doc_len", no_pos.alias("positions"),
+            F.lit(KIND_POSTING).alias("kind"),
+        )
+    ]
+    if phrase:
+        parts.append(
+            decode_positions(load_segments(spark, root, phrase)).select(
+                "term", "doc_id", no_int.alias("tf"), no_int.alias("doc_len"),
+                "positions", F.lit(KIND_POSITIONS).alias("kind"),
+            )
+        )
+    fields = [(catalog.TITLE_INDEX, KIND_TITLE)]
+    if use_anchor:
+        fields.append((catalog.ANCHOR_INDEX, KIND_ANCHOR))
+    for table, kind in fields:
+        if catalog.exists(root, table):
+            parts.append(
+                catalog.read_table(spark, root, table)
+                .filter(F.col("term").isin(terms(ROLE_TERM)))
+                .select(
+                    "term", "doc_id", no_int.alias("tf"),
+                    no_int.alias("doc_len"), no_pos.alias("positions"),
+                    F.lit(kind).alias("kind"),
+                )
+            )
+    hits = parts[0]
+    for p in parts[1:]:
+        hits = hits.unionAll(p)
+    return hits
+
+
+def _score_rows(hits: DataFrame, qt: DataFrame, avgdl: float,
+                use_anchor: bool) -> DataFrame:
+    """Per-(query, doc, term) contributions of the routed hits. Only a
+    posting of a scoring term scores; every other row is a rider with
+    score exactly 0.0 (an IEEE additive identity, so the sorted-term
+    bm25 fold is bit-identical with or without it) that sets one flag:
+    title or anchor hit, exclusion, or a phrase slot's shifted
+    positions."""
+    kind, role = F.col("kind"), F.col("role")
+    is_posting = kind == KIND_POSTING
+    scores = is_posting & (role == ROLE_TERM)
+    routed = hits.join(F.broadcast(qt), "term").filter(
+        (is_posting & role.isin(ROLE_TERM, ROLE_EXCL))
+        | ((kind == KIND_POSITIONS) & (role == ROLE_SLOT))
+        | (kind.isin(KIND_TITLE, KIND_ANCHOR) & (role == ROLE_TERM))
+    )
+    bm25 = (
+        F.col("idf")
+        * F.lit(K1 + 1.0)
+        * (
+            F.col("tf")
+            / (
+                F.col("tf")
+                + F.lit(K1)
+                * (F.lit(1.0 - B) + F.lit(B) * F.col("doc_len") / F.lit(avgdl))
+            )
+        )
+    )
+    return routed.select(
+        "query_id",
+        "doc_id",
+        "term",
+        F.when(scores, bm25).otherwise(F.lit(0.0)).alias("score"),
+        scores.cast("int").alias("is_match"),
+        F.when(kind == KIND_TITLE, 1.0).otherwise(0.0).alias("title"),
+        *([F.when(kind == KIND_ANCHOR, 1.0).otherwise(0.0).alias("anchor")]
+          if use_anchor else []),
+        (role == ROLE_EXCL).cast("int").alias("excl"),
+        F.when(
+            role == ROLE_SLOT,
+            F.transform("positions", lambda p: p - F.col("slot")),
+        ).alias("sp"),
+        "n_terms", "mode", "k", "off", "n_slots",
+    )
+
+
 def score_exhaustive(
     spark: SparkSession,
     root: str,
     queries: list[dict],
-    restrict: DataFrame | None = None,
     w_anchor: float = 0.0,
 ) -> DataFrame:
-    """(query_id, doc_id, bm25, blended, rank) for every query, top-k.
+    """(query_id, rank, doc_id, bm25, blended) for every query, top-k,
+    as ONE plan whatever the mix of queries: bucket-pruned segment
+    scan -> broadcast join of the query-term table -> one (query_id,
+    doc_id) aggregation -> per-query top-k window.
+
+    Query dicts: ``query_id``, ``query``, ``mode`` (``OR``, ``AND`` or
+    ``PHRASE``), ``k``, and optionally ``exclude`` (raw NOT terms, see
+    :func:`parse_exclusions`) and ``offset`` (ranks returned are
+    ``(offset, offset + k]``; default 0).
 
     bm25(q,d) = fold-sum over the query's terms (sorted) of
     idf * (k1+1) * tf / (tf + k1*(1-b+b*dl/avgdl)).
@@ -318,94 +496,33 @@ def score_exhaustive(
                [+ w_anchor*anchor_hit].
     Tie-break: score DESC, doc_id ASC (total order).
 
-    ``restrict`` — optional (query_id, doc_id) candidate allow-list,
-    applied BEFORE the top-k window (so k fills from the restricted
-    set, not post-cut). The phrase serving mode passes the positional
-    phrase matches here; the restriction must cover every query_id in
-    ``queries`` or the uncovered queries return no rows.
+    Every filter applies BEFORE the top-k window, so k fills from the
+    survivors: AND needs every term; a doc holding any exclusion term
+    is dropped; a PHRASE query is AND over the docs where its stemmed
+    tokens sit at consecutive positions (checked JVM-side on the
+    decoded position lists, per query_id).
 
     ``w_anchor`` — weight of the inbound-anchor-text hit
     (``anchors.build_anchor_stage``); the DEFAULT 0.0 skips the anchor
-    union entirely, keeping the reference-parity plan bit-identical.
+    rows entirely, keeping the reference-parity plan bit-identical.
     Nonzero weights only reorder docs already matching in the body
     (anchor-only docs never become candidates).
     """
     from .indexer import read_stats
 
-    n_docs, avgdl = read_stats(spark, root)
+    _check_queries(queries)
     terms = all_query_terms(queries)
-    idfs = term_idfs(spark, root, terms, n_docs)
-    qt = _query_terms_df(spark, queries, idfs)
-
-    matches = decode_segments(load_segments(spark, root, terms))
-    scored = matches.join(F.broadcast(qt), "term").select(
-        "query_id",
-        "doc_id",
-        "term",
-        (
-            F.col("idf")
-            * F.lit(K1 + 1.0)
-            * (
-                F.col("tf")
-                / (
-                    F.col("tf")
-                    + F.lit(K1)
-                    * (F.lit(1.0 - B) + F.lit(B) * F.col("doc_len") / F.lit(avgdl))
-                )
-            )
-        ).alias("score"),
-        F.col("n_terms"),
-        F.col("mode"),
-        F.col("k"),
-        F.lit(1).alias("is_match"),
-        F.lit(0.0).alias("title"),
+    if not terms:
+        return spark.createDataFrame(
+            [], "query_id int, rank int, doc_id long, bm25 double, blended double"
+        )
+    n_docs, avgdl = read_stats(spark, root)
+    rows = _query_term_rows(queries, term_idfs(spark, root, terms, n_docs))
+    use_anchor = w_anchor != 0.0 and catalog.exists(root, catalog.ANCHOR_INDEX)
+    scored = _score_rows(
+        _index_hits(spark, root, rows, use_anchor),
+        _query_terms_df(spark, rows), avgdl, use_anchor,
     )
-
-    # title hits ride the SAME aggregation instead of a join+distinct:
-    # their score is exactly 0.0 (an IEEE additive identity), so the
-    # sorted-term bm25 fold is bit-identical with or without them.
-    title_path = catalog.path(root, catalog.TITLE_INDEX)
-    anchor_path = catalog.path(root, catalog.ANCHOR_INDEX)
-    use_anchor = w_anchor != 0.0 and os.path.exists(anchor_path)
-    if use_anchor:
-        scored = scored.withColumn("anchor", F.lit(0.0))
-    if os.path.exists(title_path):
-        title = spark.read.parquet(title_path)
-        th = title.join(
-            F.broadcast(qt.select("query_id", "term").distinct()), "term"
-        ).select(
-            "query_id",
-            "doc_id",
-            "term",
-            F.lit(0.0).alias("score"),
-            F.lit(None).cast("int").alias("n_terms"),
-            F.lit(None).cast("string").alias("mode"),
-            F.lit(None).cast("int").alias("k"),
-            F.lit(0).alias("is_match"),
-            F.lit(1.0).alias("title"),
-        )
-        if use_anchor:
-            th = th.withColumn("anchor", F.lit(0.0))
-        scored = scored.unionAll(th)
-    if use_anchor:
-        # anchor hits ride the same aggregation with score 0.0 exactly
-        # like title rows — the bm25 fold stays bit-identical
-        anchor = spark.read.parquet(anchor_path)
-        ah = anchor.join(
-            F.broadcast(qt.select("query_id", "term").distinct()), "term"
-        ).select(
-            "query_id",
-            "doc_id",
-            "term",
-            F.lit(0.0).alias("score"),
-            F.lit(None).cast("int").alias("n_terms"),
-            F.lit(None).cast("string").alias("mode"),
-            F.lit(None).cast("int").alias("k"),
-            F.lit(0).alias("is_match"),
-            F.lit(0.0).alias("title"),
-            F.lit(1.0).alias("anchor"),
-        )
-        scored = scored.unionAll(ah)
 
     per_doc = scored.groupBy("query_id", "doc_id").agg(
         # deterministic fold order: sort per-term scores by term name
@@ -416,48 +533,30 @@ def score_exhaustive(
         ).alias("bm25"),
         F.sum("is_match").alias("n_hit"),
         F.max("title").alias("title_hit"),
-        F.first("n_terms", ignorenulls=True).alias("n_terms"),
-        F.first("mode", ignorenulls=True).alias("mode"),
-        F.first("k", ignorenulls=True).alias("k"),
+        F.max("excl").alias("excluded"),
+        F.collect_list("sp").alias("sets"),  # skips non-slot NULLs
+        *[F.first(c, ignorenulls=True).alias(c)
+          for c in ("n_terms", "mode", "k", "off", "n_slots")],
         *([F.max("anchor").alias("anchor_hit")] if use_anchor else []),
     )
     # candidates = docs with at least one posting match (title-only rows
     # are not candidates — reference oracle semantics)
+    n_slots = F.col("n_slots")
     candidates = per_doc.filter(
         (F.col("n_hit") > 0)
         & ((F.col("mode") == "OR") | (F.col("n_hit") == F.col("n_terms")))
+        & (F.col("excluded") == 0)
+        # CASE keeps the intersection fold off docs missing a slot
+        & F.when(n_slots.isNull(), True)
+        .when(F.size("sets") == n_slots, _phrase_hits("sets", n_slots) > 0)
+        .otherwise(False)
     )
-    if restrict is not None:
-        # phrase serving: the allow-list is k-to-hundreds of rows —
-        # broadcast semi-join, the candidate side never shuffles for it
-        candidates = candidates.join(
-            F.broadcast(restrict.select("query_id", "doc_id")),
-            ["query_id", "doc_id"],
-            "left_semi",
-        )
-
-    # NOT semantics: drop docs containing any excluded term BEFORE the
-    # top-k window. The deny side can be head-term-sized, so this is a
-    # plain shuffled anti-join on (query_id, doc_id), never a broadcast.
-    ex_by_q = {int(q["query_id"]): parse_exclusions(q) for q in queries}
-    ex_rows = [(qid, t) for qid, ts in ex_by_q.items() for t in ts]
-    if ex_rows:
-        ex_terms = sorted({t for _, t in ex_rows})
-        eqt = spark.createDataFrame(ex_rows, "query_id int, term string")
-        deny = (
-            decode_segments(load_segments(spark, root, ex_terms))
-            .join(F.broadcast(eqt), "term")
-            .select("query_id", "doc_id")
-            .distinct()
-        )
-        candidates = candidates.join(
-            deny, ["query_id", "doc_id"], "left_anti"
-        )
 
     # blend: pagerank
-    pr_path = catalog.path(root, catalog.PAGERANKS)
-    if os.path.exists(pr_path):
-        pr = spark.read.parquet(pr_path).select("doc_id", F.col("rank").alias("pagerank"))
+    if catalog.exists(root, catalog.PAGERANKS):
+        pr = catalog.read_table(spark, root, catalog.PAGERANKS).select(
+            "doc_id", F.col("rank").alias("pagerank")
+        )
         candidates = candidates.join(pr, "doc_id", "left").fillna({"pagerank": 0.0})
     else:
         candidates = candidates.withColumn("pagerank", F.lit(0.0))
@@ -474,8 +573,9 @@ def score_exhaustive(
     w = Window.partitionBy("query_id").orderBy(
         F.desc("blended"), F.asc("doc_id")
     )
+    rank = F.col("rank")
     return (
         blended.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
+        .filter((rank > F.col("off")) & (rank <= F.col("off") + F.col("k")))
         .select("query_id", "rank", "doc_id", "bm25", "blended")
     )

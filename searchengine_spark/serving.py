@@ -17,16 +17,22 @@ pages corpus on url — a broadcast of the *results*, so the corpus-side
 lookup is a semi-join pruned scan, never a full-corpus shuffle; title/
 snippet extraction then runs as one Arrow-vectorized pandas UDF over
 the joined rows only (k rows, not the corpus).
+
+Batching: :func:`search_many` answers N requests with one scoring plan
+(``query.score_exhaustive`` — every mode, exclusion and offset in the
+batch) and one doc fetch, 8 Spark jobs in all with a docstore built;
+:class:`QueryBatcher`
+coalesces concurrent requests into such batches.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .query import phrase_match, score_exhaustive
+from .query import QUERY_MODES, score_exhaustive
 from .textprep import _RE_P, _RE_TITLE, java_tokens
 
 SNIPPET_WORDS = 50
@@ -171,131 +177,81 @@ def _topk_df(
     w_anchor: float = 0.0,
 ) -> DataFrame:
     """(query_id, rank, doc_id, bm25, blended) for a list of request
-    dicts ``{query, mode, k, offset}``; query_id = list index; rank
-    spans [1, offset+k] (the caller applies the per-query offset cut).
-
-    PHRASE requests score in a separate ``score_exhaustive`` call:
-    its ``restrict`` allow-list must cover every query_id it scores
-    with, so phrase and non-phrase requests cannot share one."""
-    plain_qs: list[dict] = []
-    phrase_qs: list[dict] = []
-    restricts: list[DataFrame] = []
+    dicts ``{query, mode, k, offset}``; query_id = list index; ranks
+    span ``(offset, offset + k]`` per request. ONE
+    ``score_exhaustive`` plan scores the whole batch, whatever its mix
+    of modes, exclusions and offsets."""
+    qs = []
     for i, r in enumerate(reqs):
-        mode = str(r.get("mode", "OR")).upper()
         query, exclude = split_exclusions(r["query"])
-        k = int(r.get("k", DEFAULT_LIMIT))
-        offset = int(r.get("offset", 0) or 0)
-        q = {"query_id": i, "query": query, "k": offset + k,
-             "exclude": exclude}
-        if mode == "PHRASE":
-            # keep token order and duplicates — parse_query dedups,
-            # which is right for bag-of-words scoring but wrong for a
-            # phrase
-            toks = java_tokens(query.lower())
-            restricts.append(
-                phrase_match(spark, root, toks).select(
-                    F.lit(i).alias("query_id"), "doc_id"
-                )
-            )
-            # a phrase match contains every term, so AND == OR over the
-            # restricted candidates; AND is declared for plan clarity
-            q["mode"] = "AND"
-            phrase_qs.append(q)
-        else:
-            q["mode"] = mode
-            plain_qs.append(q)
-    parts: list[DataFrame] = []
-    if plain_qs:
-        parts.append(
-            score_exhaustive(spark, root, plain_qs, w_anchor=w_anchor)
-        )
-    if phrase_qs:
-        restrict = restricts[0]
-        for extra in restricts[1:]:
-            restrict = restrict.unionAll(extra)
-        parts.append(
-            score_exhaustive(
-                spark, root, phrase_qs, restrict=restrict,
-                w_anchor=w_anchor,
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out
+        qs.append({
+            "query_id": i, "query": query, "exclude": exclude,
+            "mode": r.get("mode", "OR"),
+            "k": int(r.get("k", DEFAULT_LIMIT)),
+            "offset": int(r.get("offset", 0) or 0),
+        })
+    return score_exhaustive(spark, root, qs, w_anchor=w_anchor)
 
 
-def _attach_docs(
-    spark: SparkSession, root: str, pages_path: str, topk: DataFrame
-) -> DataFrame:
-    """(query_id, rank, url, title, snippet, bm25, blended) for a
-    ranked (query_id, rank, doc_id, bm25, blended) frame."""
+def _docstore_docs(
+    spark: SparkSession, root: str, doc_ids: list[int]
+) -> DataFrame | None:
+    """(doc_id, url, title, snippet) of ``doc_ids`` from the doc-id-sorted
+    docstore via a pushed ``In(doc_id)`` filter — O(k) row groups
+    decoded, no corpus scan; None when no docstore is built."""
     from . import catalog
 
-    if catalog.exists(root, catalog.DOCSTORE):
-        # fast path: the ranked k rows are materialized (the sanctioned
-        # k-row serving fetch), then looked up in the doc-id-sorted
-        # docstore via a pushed In(doc_id) filter — O(k) row groups
-        # decoded, no corpus scan, no re-run of the scoring job on the
-        # lookup side.
-        rows = topk.collect()
-        local = spark.createDataFrame(rows, schema=topk.schema)
-        store = spark.read.parquet(catalog.path(root, catalog.DOCSTORE))
-        if rows:
-            store = store.filter(
-                F.col("doc_id").isin(
-                    sorted({r["doc_id"] for r in rows})
-                )
-            )
-        else:
-            store = store.filter(F.lit(False))
-        fast_df = store.join(F.broadcast(local), "doc_id").select(
-            "query_id", "rank", "url", "title", "snippet", "bm25", "blended"
-        )
-        # Docs in the post-merge lag window (ranked from docstats but
-        # not yet appended to the docstore — fsck flags these as a
-        # warning) must not leave rank gaps. Precheck coverage with a
-        # doc_id-only probe — column-pruned and In-pushed, it decodes
-        # the SAME O(k) row groups the fetch will (cache-warm, one tiny
-        # job per batch) — and route misses through the corpus-scan
-        # fallback, so serving degrades to slower, never to missing
-        # results. The common covered case returns the lazy pushed-In
-        # plan unchanged.
-        have = {r["doc_id"] for r in store.select("doc_id").collect()}
-        missed = [r for r in rows if r["doc_id"] not in have]
-        if not missed:
-            return fast_df
-        miss_df = spark.createDataFrame(missed, schema=topk.schema)
-        return fast_df.unionAll(
-            _attach_docs_corpus(spark, root, pages_path, miss_df)
-        )
-
-    return _attach_docs_corpus(spark, root, pages_path, topk)
+    if not catalog.exists(root, catalog.DOCSTORE):
+        return None
+    store = catalog.read_table(spark, root, catalog.DOCSTORE)
+    return store.filter(
+        F.col("doc_id").isin(doc_ids) if doc_ids else F.lit(False)
+    )
 
 
-def _attach_docs_corpus(
-    spark: SparkSession, root: str, pages_path: str, topk: DataFrame
+def _corpus_docs(
+    spark: SparkSession, root: str, pages_path: str, doc_ids: list[int]
 ) -> DataFrame:
-    """Slow-path doc attach: join the ranked rows back through docstats
-    and the raw corpus, extracting title/snippet per request."""
+    """Slow-path (doc_id, url, title, snippet): docstats gives the urls,
+    the raw corpus the html, and title/snippet are extracted per
+    request. The k doc rows are broadcast into the corpus lookup —
+    the corpus side streams, nothing big ever shuffles."""
     from . import catalog
 
-    docstats = spark.read.parquet(catalog.path(root, catalog.DOCSTATS)).select(
-        "doc_id", "url"
+    docstats = (
+        catalog.read_table(spark, root, catalog.DOCSTATS)
+        .filter(F.col("doc_id").isin(doc_ids))
+        .select("doc_id", "url")
     )
     pages = spark.read.parquet(pages_path).select("url", "html")
-    # broadcast the k ranked rows into both lookups — the corpus and
-    # docstats sides stream, nothing big ever shuffles
-    ranked = docstats.join(F.broadcast(topk), "doc_id")
-    return pages.join(F.broadcast(ranked), "url").select(
-        "query_id",
-        "rank",
+    return pages.join(F.broadcast(docstats), "url").select(
+        "doc_id",
         "url",
         title_udf("html").alias("title"),
         snippet_udf("html").alias("snippet"),
-        "bm25",
-        "blended",
     )
+
+
+def _fetch_docs(
+    spark: SparkSession, root: str, pages_path: str, doc_ids: list[int]
+) -> dict[int, Row]:
+    """doc_id -> (doc_id, url, title, snippet) Row, in ONE docstore
+    collect: the fetch is its own coverage probe. Docs in the post-merge
+    lag window (ranked from docstats but not yet appended to the
+    docstore — fsck flags these as a warning), or every doc when no
+    docstore is built, come from the corpus-scan fallback, so serving
+    degrades to slower, never to missing results."""
+    if not doc_ids:
+        return {}
+    store = _docstore_docs(spark, root, doc_ids)
+    docs = {r["doc_id"]: r for r in store.collect()} if store is not None else {}
+    missed = [d for d in doc_ids if d not in docs]
+    if missed:
+        docs.update(
+            (r["doc_id"], r)
+            for r in _corpus_docs(spark, root, pages_path, missed).collect()
+        )
+    return docs
 
 
 def search(
@@ -319,13 +275,29 @@ def search(
     ``-term`` tokens in the query string are EXCLUSIONS (NOT): docs
     containing any of them are dropped before the top-k, so k fills
     from survivors. Exclusions compose with every mode (in PHRASE they
-    apply on top of the positional restriction)."""
+    apply on top of the positional restriction).
+
+    The ranked k rows are materialized (the sanctioned k-row serving
+    fetch); the returned frame looks them up lazily in the docstore
+    (pushed ``In(doc_id)``), falling back to the corpus scan for docs
+    the docstore lacks."""
     req = {"query": query, "mode": mode, "k": k, "offset": offset}
-    topk = _topk_df(spark, root, [req], w_anchor=w_anchor).filter(
-        F.col("rank") > offset
-    )
+    topk = _topk_df(spark, root, [req], w_anchor=w_anchor)
+    ranked = topk.collect()
+    ids = sorted({r["doc_id"] for r in ranked})
+    docs = _docstore_docs(spark, root, ids)
+    if docs is None:
+        docs = _corpus_docs(spark, root, pages_path, ids)
+    elif ids:
+        have = {r["doc_id"] for r in docs.select("doc_id").collect()}
+        missed = [d for d in ids if d not in have]
+        if missed:
+            docs = docs.unionByName(
+                _corpus_docs(spark, root, pages_path, missed)
+            )
+    local = spark.createDataFrame(ranked, schema=topk.schema)
     return (
-        _attach_docs(spark, root, pages_path, topk)
+        docs.join(F.broadcast(local), "doc_id")
         .select("rank", "url", "title", "snippet", "bm25", "blended")
         .orderBy("rank")
     )
@@ -335,46 +307,52 @@ def search_many(
     spark: SparkSession, root: str, pages_path: str, reqs: list[dict],
     w_anchor: float = 0.0,
 ) -> list[list]:
-    """Batched serving: one scoring job + one doc lookup for N
-    requests; returns per-request row lists (rank-ascending, ranks
-    absolute as in :func:`search`). ``reqs``: ``{query, mode, k,
-    offset}`` dicts. Results are identical to N independent
-    :func:`search` calls — the batch only amortizes the per-job cost
+    """Batched serving: returns per-request row lists (rank-ascending,
+    ranks absolute as in :func:`search`) for ``{query, mode, k,
+    offset}`` request dicts. Results are identical to N independent
+    :func:`search` calls; the batch only amortizes the per-job cost
     (scheduling, segment reads, python decode spin-up) across the
-    requests sharing it."""
+    requests sharing it.
+
+    A batch runs four Spark actions whatever its size and mix: the
+    corpus stats, the query terms' idfs, the one scoring plan, and the
+    docstore fetch of every ranked doc (plus a corpus-scan fallback
+    only for docs the docstore lacks). The scoring plan's two
+    broadcasts and two shuffle stages are Spark jobs of their own, so
+    a batch runs 8 jobs (10 without a docstore: the corpus-scan fetch
+    adds a broadcast). Measured on a 4-core VM over the 600-page
+    perfbench index, a 4-request OR/AND/PHRASE/exclusion batch spends
+    ~1.6 s in ``search_many`` (~2.1 s including plan construction)."""
     if not reqs:
         return []
-    offs = spark.createDataFrame(
-        [(i, int(r.get("offset", 0) or 0)) for i, r in enumerate(reqs)],
-        "query_id int, off int",
+    ranked = _topk_df(spark, root, reqs, w_anchor=w_anchor).collect()
+    docs = _fetch_docs(
+        spark, root, pages_path, sorted({r["doc_id"] for r in ranked})
     )
-    topk = (
-        _topk_df(spark, root, reqs, w_anchor=w_anchor)
-        .join(F.broadcast(offs), "query_id")
-        .filter(F.col("rank") > F.col("off"))
-        .drop("off")
-    )
-    rows = _attach_docs(spark, root, pages_path, topk).collect()
-    by_q: dict[int, list] = {i: [] for i in range(len(reqs))}
-    for r in rows:
-        by_q[r["query_id"]].append(r)
-    for rs in by_q.values():
-        rs.sort(key=lambda r: r["rank"])
-    return [by_q[i] for i in range(len(reqs))]
+    by_q: list[list] = [[] for _ in reqs]
+    for r in sorted(ranked, key=lambda r: (r["query_id"], r["rank"])):
+        d = docs.get(r["doc_id"])
+        if d is not None:
+            by_q[r["query_id"]].append(Row(
+                query_id=r["query_id"], rank=r["rank"], url=d["url"],
+                title=d["title"], snippet=d["snippet"], bm25=r["bm25"],
+                blended=r["blended"],
+            ))
+    return by_q
 
 
 class QueryBatcher:
-    """Micro-batches concurrent search requests into one Spark job.
+    """Micro-batches concurrent search requests into one
+    :func:`search_many` call.
 
     The reference serves from a 100-thread pool over one shared backend
     (``webserver/Server.java:17``); the Spark analog is sharing one
-    *job* — a single request pays ~2 s of fixed per-job cost (stage
-    scheduling, segment reads, python decode spin-up) while the
-    marginal cost of adding a query to a batch is ~0.2-0.35 s. The
-    batcher needs no artificial time window: the in-flight job IS the
-    window — requests arriving while a batch executes queue up and all
-    ship in the next one, so an idle server still answers a lone
-    request at single-query latency.
+    batch's Spark jobs — a batch runs 8 jobs whatever its size and mix
+    (:func:`search_many`), so its cost is mostly per-job scheduling and
+    task launch, not per-query work. The in-flight batch is the queueing window:
+    requests arriving while a batch executes queue up and all ship in
+    the next one, after a short gather window (below), so an idle
+    server still answers a lone request at single-query latency.
 
     Thread-safe; results are identical to per-request :func:`search`
     calls (``search_many`` is the same plan with more query_ids).
@@ -413,8 +391,14 @@ class QueryBatcher:
         k: int = DEFAULT_LIMIT,
         offset: int = 0,
     ) -> list:
-        """Enqueue one request and block until its batch lands."""
+        """Enqueue one request and block until its batch lands. Bad
+        arguments raise here, before they could fail a shared batch."""
         import threading
+
+        if mode.upper() not in QUERY_MODES or offset < 0 or k < 0:
+            raise ValueError(
+                f"bad search request: mode={mode!r} k={k} offset={offset}"
+            )
 
         pend = {
             "req": {"query": query, "mode": mode, "k": k, "offset": offset},

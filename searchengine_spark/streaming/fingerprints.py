@@ -14,11 +14,14 @@ arrival immediately surfaces its overlap with a batch-0 document —
 the property a plagiarism/near-dup monitor needs and a per-batch-local
 run cannot have.
 
-Replay idempotence: per-batch overwrite directories keyed by batch id
-(same checkpoint ⇒ same batch id ⇒ same dir — the CLAUDE.md stream-
-chunk rule; this dir layout embeds only the batch id because each
-fingerprint dir is 1:1 with its checkpoint, wiped together, per the
-anchors convention).
+Replay idempotence: per-batch overwrite directories named
+``batch=stream-<md5(abspath(ckpt))[:8]>-<batch_id>``, as
+``streaming/ingest`` and ``streaming/anchors`` name theirs. Batch ids
+are only unique per checkpoint: a replay of the SAME (checkpoint,
+batch) overwrites its own dir, while a fresh checkpoint over the same
+``fp_dir`` writes new dirs instead of overwriting the first run's
+low batch ids (which, re-batched with different boundaries, would
+leave stale higher-numbered dirs duplicating docs in the census).
 
 Scale shape: partials carry (doc_id, selkey) int64 pairs — ~2/(W+1)
 of the k-gram count per doc, never text; the pair join keys on the
@@ -29,6 +32,7 @@ q83's stop-shingle argument.
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -54,18 +58,19 @@ def stream_winnow_fingerprints(
     schema: T.StructType = DOCS_SCHEMA,
 ):
     """availableNow stream over a documents directory: write each
-    micro-batch's winnowing partials to ``fp_dir/{nk,sel}/batch=<id>``
-    (overwrite — replay-idempotent). Returns the StreamingQuery."""
+    micro-batch's winnowing partials to
+    ``fp_dir/{nk,sel}/batch=stream-<ckpt-hash>-<id>`` (overwrite —
+    replay-idempotent per checkpoint). Returns the StreamingQuery."""
     s = spark.readStream.schema(schema).parquet(docs_dir)
+    ck_tag = hashlib.md5(
+        os.path.abspath(checkpoint_dir).encode()
+    ).hexdigest()[:8]
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         nk, sel = winnow_parts(batch_df)
-        nk.write.mode("overwrite").parquet(
-            os.path.join(fp_dir, "nk", f"batch={batch_id:08d}")
-        )
-        sel.write.mode("overwrite").parquet(
-            os.path.join(fp_dir, "sel", f"batch={batch_id:08d}")
-        )
+        part = f"batch=stream-{ck_tag}-{batch_id:08d}"
+        nk.write.mode("overwrite").parquet(os.path.join(fp_dir, "nk", part))
+        sel.write.mode("overwrite").parquet(os.path.join(fp_dir, "sel", part))
 
     return (
         s.writeStream.foreachBatch(write_batch)

@@ -371,6 +371,17 @@ def test_search_many_matches_solo(spark, tiny_index, tiny_pages_path):
         {"query": f"{VOCAB[0]} {VOCAB[1]}", "mode": "OR", "k": 5,
          "offset": 5},
         {"query": "zzznotaterm", "mode": "OR", "k": 5},
+        # a second PHRASE in the same batch, with a repeated term (one
+        # slot per occurrence: "flaidrai bregux flaidrai" occurs in the
+        # tiny corpus) ...
+        {"query": f"{VOCAB[0]} {VOCAB[3]} {VOCAB[0]}", "mode": "PHRASE",
+         "k": 5},
+        # ... and a third with an exclusion on top of the adjacency
+        {"query": f"{VOCAB[0]} {VOCAB[1]} -{VOCAB[2]}", "mode": "PHRASE",
+         "k": 5},
+        # an OR request excluding one of its own terms
+        {"query": f"{VOCAB[0]} {VOCAB[1]} -{VOCAB[1]}", "mode": "OR",
+         "k": 5},
     ]
     got = search_many(spark, tiny_index, tiny_pages_path, reqs)
     key = ("rank", "url", "title", "snippet", "bm25", "blended")
@@ -382,6 +393,45 @@ def test_search_many_matches_solo(spark, tiny_index, tiny_pages_path):
         assert [tuple(r[c] for c in key) for r in rows] == [
             tuple(r[c] for c in key) for r in want
         ], req
+    assert got[6], "the repeated-term phrase should match the tiny corpus"
+    # excluding its own term leaves the docs holding only the other one
+    assert got[8] and len(got[8]) <= len(got[0])
+
+
+# the Spark jobs one mixed search_many batch may run on the tiny index:
+# stats, idfs, the one scoring plan (its broadcast and shuffle stages
+# are jobs of their own) and the doc fetch
+SEARCH_MANY_MAX_JOBS = 10
+
+
+def test_search_many_job_budget(spark, tiny_index, tiny_pages_path):
+    """A batch mixing OR, AND, PHRASE, exclusions and an offset scores
+    as ONE plan: its Spark job count, counted through a job group the
+    way perfbench counts serving.search_many, stays within a fixed
+    budget (a separate phrase plan, deny-list scan or schema-inferring
+    read would each add jobs)."""
+    from searchengine_spark.corpus import VOCAB
+    from searchengine_spark.serving import search_many
+
+    reqs = [
+        {"query": f"{VOCAB[0]} {VOCAB[1]}", "mode": "OR", "k": 15},
+        {"query": f"{VOCAB[2]} {VOCAB[3]}", "mode": "AND", "k": 15},
+        {"query": f"{VOCAB[0]} {VOCAB[1]}", "mode": "PHRASE", "k": 15},
+        {"query": f"{VOCAB[4]} {VOCAB[5]} -{VOCAB[6]}", "mode": "OR",
+         "k": 15, "offset": 15},
+        {"query": f"{VOCAB[0]} {VOCAB[3]} {VOCAB[0]}", "mode": "PHRASE",
+         "k": 15},
+    ]
+    sc = spark.sparkContext
+    group = "test-search-many-job-budget"
+    sc.setJobGroup(group, "search_many job budget")
+    try:
+        got = search_many(spark, tiny_index, tiny_pages_path, reqs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert all(got), [len(rows) for rows in got]
+    assert n_jobs <= SEARCH_MANY_MAX_JOBS, n_jobs
 
 
 def test_query_batcher_coalesces(spark, tiny_index, tiny_pages_path):

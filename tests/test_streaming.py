@@ -815,3 +815,29 @@ def test_stream_winnowing_matches_batch(spark):
     stream_winnow_fingerprints(spark, docs_dir, fp_dir, ckpt).awaitTermination()
     again = [tuple(r) for r in read_winnow_census(spark, fp_dir).collect()]
     assert again == streamed
+
+    # cross-checkpoint non-clobber: a SECOND run (fresh checkpoint, only
+    # the b1 file) into the same fp_dir restarts its batch ids at 0 —
+    # its batch-0 partials must land in their own ckpt-tagged dirs, NOT
+    # overwrite the first run's batch 0 (which held a0's docs). Every
+    # first-run partial row survives and b1's rows are added once more.
+    def nk_rows():
+        return sorted(
+            tuple(r) for r in spark.read.parquet(os.path.join(fp_dir, "nk"))
+            .select("doc_id", "n_kgrams").collect()
+        )
+
+    before = nk_rows()
+    docs_dir2 = os.path.join(STREAMDIR, "docs_winnow2")
+    ckpt2 = os.path.join(STREAMDIR, "winnow_ckpt2")
+    for d in (docs_dir2, ckpt2):
+        shutil.rmtree(d, ignore_errors=True)
+    os.makedirs(docs_dir2)
+    pq.write_table(b1, os.path.join(docs_dir2, "b1.parquet"))
+    stream_winnow_fingerprints(spark, docs_dir2, fp_dir, ckpt2).awaitTermination()
+    b1_nk, _ = winnow_parts(spark.read.parquet(docs_dir2))
+    assert nk_rows() == sorted(
+        before + [tuple(r) for r in b1_nk.select("doc_id", "n_kgrams").collect()]
+    ), "second checkpoint's batch-0 clobbered the first run's partials"
+    census_docs = {r["doc_id"] for r in read_winnow_census(spark, fp_dir).collect()}
+    assert {r[0] for r in streamed} <= census_docs

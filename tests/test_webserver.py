@@ -44,6 +44,18 @@ def test_missing_query_is_400(server_url):
         assert ei.value.read().decode() == "Query parameter is missing"
 
 
+def test_negative_paging_is_400(server_url):
+    """A negative offset or limit is a bad request on both search
+    routes, never a slice counted from the end of the ranked prefix."""
+    q = quote(f"{VOCAB[0]} {VOCAB[1]}")
+    for route in ("/search", "/api/search"):
+        for paging in ("offset=-5&limit=15", "offset=0&limit=-1"):
+            with pytest.raises(urllib.error.HTTPError) as ei:
+                _get(f"{server_url}{route}?query={q}&{paging}")
+            assert ei.value.code == 400, (route, paging)
+            assert ei.value.read().decode().startswith("Bad request:")
+
+
 def test_no_matches_and_offset_past_end(server_url):
     status, body = _get(f"{server_url}/search?query=zzznotaterm")
     assert (status, body) == (200, "No matched pages found")
